@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from building_a_rag_pipeline_with_airflow_spark.functions.vectors import (
-    cosine_similarity,
+    cosine_to_query,
     dot_product,
     l2_norm,
 )
@@ -42,11 +42,17 @@ def topk_cosine(
     """Exact cosine top-k for one query vector (V2). ``prefilter`` is an
     optional Column predicate applied *before* scoring (V3 hybrid search —
     partition-prunable at scale)."""
+    return _topk_carrying(corpus, query_vec, k, vec_col, id_col, prefilter, ())
+
+
+def _topk_carrying(corpus, query_vec, k, vec_col, id_col, prefilter, carry):
+    """:func:`topk_cosine` whose rows also carry the ``carry`` columns,
+    read in the same scan (``retrieval.retrieve_chunks``)."""
     df = corpus if prefilter is None else corpus.where(prefilter)
-    q = F.array(*[F.lit(float(x)) for x in query_vec])
     scored = df.select(
         F.col(id_col),
-        F.round(cosine_similarity(F.col(vec_col), q), 4).alias("score"),
+        F.round(cosine_to_query(vec_col, query_vec), 4).alias("score"),
+        *carry,
     )
     # orderBy+limit compiles to TakeOrderedAndProject: per-partition heaps,
     # no full sort, no corpus shuffle.
@@ -945,7 +951,6 @@ def binary_topk_cosine(
     pinned in tests/test_mllib_ann.py)."""
     from building_a_rag_pipeline_with_airflow_spark.functions.vectors import (
         binary_signature,
-        cosine_similarity,
     )
 
     if k < 1 or shortlist < k:
@@ -965,11 +970,10 @@ def binary_topk_cosine(
         F.bit_count(F.col("_sig").bitwiseXOR(F.lit(qsig).cast("long"))),
     )
     short = sigged.orderBy(F.asc("_ham"), F.asc(c_id)).limit(int(shortlist))
-    qlit = F.array(*[F.lit(float(v)) for v in query_vec])
     return (
         short.select(
             c_id,
-            F.round(cosine_similarity(F.col(c_vec), qlit), 4).alias("score"),
+            F.round(cosine_to_query(c_vec, query_vec), 4).alias("score"),
         )
         .orderBy(F.desc("score"), F.asc(c_id))
         .limit(int(k))

@@ -106,7 +106,7 @@ def rag_pipeline(
     html: bool = False,
 ) -> DataFrame:
     """Full E1 flagship: load documents, index, retrieve. Returns the ranked
-    top-k chunk DataFrame (rank, chunk_id, doc_id, score, text...).
+    top-k chunk DataFrame (chunk_id, score, doc_id, text, ..., rank).
     ``html=True`` strips HTML boilerplate before chunking (see
     :func:`build_index`) — the knob for corpora landed straight from the
     S5 fetch path."""
@@ -165,13 +165,23 @@ def upsert_documents(
     old-or-new per bucket (parquet has no multi-partition transaction —
     the same visibility contract as every dynamic-overwrite sink here);
     a table format (Delta/Iceberg) would make the swap atomic without
-    changing this plan."""
+    changing this plan.
+
+    Metadata columns the index was built with (``build_index``'s
+    ``keep_cols``) are read off the stored layout: the index columns that
+    ``changed_docs`` carries and chunking does not produce."""
     bucket_of = F.pmod(
         F.xxhash64(F.col("doc_id").cast("string")), F.lit(n_doc_buckets)
     ).cast("int")
-    fresh = build_index(changed_docs, strategy=strategy, dim=dim).withColumn(
-        "doc_bucket", bucket_of
+    stored = spark.read.parquet(path)
+    fresh = build_index(changed_docs, strategy=strategy, dim=dim)
+    keep_cols = tuple(
+        c for c in stored.columns
+        if c in changed_docs.columns and c not in fresh.columns
     )
+    if keep_cols:
+        fresh = build_index(changed_docs, strategy=strategy, dim=dim, keep_cols=keep_cols)
+    fresh = fresh.withColumn("doc_bucket", bucket_of)
     affected = sorted(
         r.doc_bucket
         for r in fresh.select("doc_bucket").distinct().collect()
@@ -179,7 +189,7 @@ def upsert_documents(
     if not affected:
         return []
     changed_ids = changed_docs.select("doc_id").distinct()
-    current = spark.read.parquet(path).where(F.col("doc_bucket").isin(affected))
+    current = stored.where(F.col("doc_bucket").isin(affected))
     kept = current.join(F.broadcast(changed_ids), "doc_id", "left_anti")
     out = kept.unionByName(fresh.select(*kept.columns))
     (

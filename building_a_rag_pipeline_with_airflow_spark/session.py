@@ -47,6 +47,19 @@ _BASE_CONF: dict[str, str] = {
 }
 
 
+def _driver_memory(phys_bytes: int | None = None) -> str:
+    """Local-mode driver heap: ``$SPARK_GRAFT_DRIVER_MEM`` if set, else
+    48g capped at half of physical memory. An uncapped 48g heap on a
+    15 GB host grew until the kernel OOM-killed the JVM; the other half
+    is left to the Python workers, off-heap buffers and the page cache."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48 * 1024, phys_bytes // 2 // 2**20)}m"
+
+
 def get_spark(
     app_name: str = "building_a_rag_pipeline_with_airflow_spark",
     master: str | None = None,
@@ -63,9 +76,7 @@ def get_spark(
         cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
         master = f"local[{cpus}]"
         # local mode = driver-only: the driver heap IS executor memory.
-        builder = builder.config(
-            "spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g")
-        )
+        builder = builder.config("spark.driver.memory", _driver_memory())
     if master:
         builder = builder.master(master)
     conf = dict(_BASE_CONF)

@@ -226,6 +226,41 @@ def test_upsert_documents_rewrites_only_affected_buckets(spark, sf_dir, tmp_path
         assert os.path.getmtime(p) == mtimes_before[p], f"rewrote {p}"
 
 
+def test_upsert_documents_keeps_metadata_columns(spark, sf_dir, tmp_path):
+    """Upserting into an index built with ``keep_cols`` equals a full
+    rebuild: the kept metadata columns are taken from the stored layout,
+    revised metadata lands in the index, and the column order holds."""
+    from pyspark.sql import functions as F
+
+    from building_a_rag_pipeline_with_airflow_spark.pipeline import (
+        build_index,
+        read_index_bucketed,
+        upsert_documents,
+        write_index_bucketed,
+    )
+
+    keep = ("lang", "source")
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(200)
+    path = str(tmp_path / "bucketed_index")
+    write_index_bucketed(build_index(docs, keep_cols=keep), path, n_doc_buckets=8)
+
+    changed = docs.where(F.col("doc_id").isin([3, 7])).withColumn(
+        "text",
+        F.when(F.col("doc_id") == 3, F.concat(F.col("text"), F.lit(" more")))
+        .otherwise(F.lit("tiny now")),
+    ).withColumn("lang", F.lit("xx"))
+    assert upsert_documents(spark, path, changed, n_doc_buckets=8)
+
+    revised = docs.where(~F.col("doc_id").isin([3, 7])).unionByName(changed)
+    want = build_index(revised, keep_cols=keep)
+    got = read_index_bucketed(spark, path)
+    assert got.columns == want.columns
+    assert sorted(got.collect(), key=lambda r: r.chunk_id) == sorted(
+        want.collect(), key=lambda r: r.chunk_id
+    )
+    assert {r.lang for r in got.where(F.col("doc_id") == 7).collect()} == {"xx"}
+
+
 def test_layout_report_audits_files_and_spans(spark, sf_dir, tmp_path):
     from building_a_rag_pipeline_with_airflow_spark import schemas
     from building_a_rag_pipeline_with_airflow_spark.sources import io as sio

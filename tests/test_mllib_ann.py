@@ -136,6 +136,46 @@ def test_cosine_scores_pandas_matches_hof(spark, emb, query_vec):
     assert rows[0] is None and rows[1] == 0.0
 
 
+@pytest.mark.parametrize("storage", ["array<float>", "array<double>"])
+def test_cosine_to_query_bit_identical_to_hof(spark, emb, query_vec, storage):
+    """The one-expression constant-query cosine equals the Column-built
+    HOF cosine bit for bit (unrounded ==) over float and double storage,
+    for a real query, a query whose literals print in exponent form and a
+    zero query; a NULL row stays NULL, zero and short rows score 0.0."""
+    from building_a_rag_pipeline_with_airflow_spark.functions.vectors import (
+        cosine_similarity,
+        cosine_to_query,
+    )
+
+    dim = len(query_vec)
+    edge = spark.createDataFrame(
+        [(-1, None), (-2, [0.0] * dim), (-3, query_vec[: dim // 2])],
+        "vec_id bigint, embedding array<double>",
+    )
+    rows = emb.select("vec_id", "embedding").unionByName(edge).select(
+        "vec_id", F.col("embedding").cast(storage).alias("embedding")
+    )
+    queries = {
+        "real": query_vec,
+        "exponent": [1e-07, -2.5e-12] + query_vec[2:],
+        "zero": [0.0] * dim,
+    }
+    for name, q in queries.items():
+        lits = F.array(*[F.lit(float(x)) for x in q])
+        got = rows.select(
+            "vec_id",
+            cosine_to_query("embedding", q).alias("new"),
+            cosine_similarity("embedding", lits).alias("hof"),
+        ).collect()
+        assert len(got) == emb.count() + 3
+        diff = [r.vec_id for r in got if r.new != r.hof]
+        assert not diff, (name, diff[:5])
+        by_id = {r.vec_id: r.new for r in got}
+        assert by_id[-1] is None and by_id[-2] == 0.0 and by_id[-3] == 0.0
+        nonzero = sum(1 for r in got if r.new)
+        assert nonzero == (0 if name == "zero" else len(got) - 3), name
+
+
 def test_quantize_int8_roundtrip_error_bound(spark, emb):
     """Per-element |x - dequant(quant(x))| <= scale/2, exactly zero for
     all-zero vectors, and codes stay in int8 range."""

@@ -937,6 +937,91 @@ def test_sentence_window_broadcasts_hits(spark, sf_dir):
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BroadcastHashJoin" in plan
     assert "CartesianProduct" not in plan
-    # the only Window in the plan is retrieve_chunks' k-row rank join,
-    # never one over the chunk corpus: no corpus-side Window before agg
+    # the only Window in the plan is retrieve_chunks' rank over the k
+    # top-k rows, never one over the chunk corpus: no corpus-side Window
+    # before agg
     assert plan.count("Window") <= 1
+
+
+@pytest.fixture(scope="module")
+def written_chunk_index(spark, sf_dir, tmp_path_factory):
+    from building_a_rag_pipeline_with_airflow_spark.pipeline import build_index
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet").limit(120)
+    path = str(tmp_path_factory.mktemp("rag") / "index")
+    build_index(docs, keep_cols=("lang",)).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+@pytest.mark.parametrize("filtered", [False, True])
+def test_rag_query_is_one_job_over_one_scan(spark, written_chunk_index, filtered):
+    """A dense or lang-filtered RAG request over a written parquet index
+    runs exactly one Spark job; its executed plan holds one parquet scan
+    and no join (the payload travels with the top-k rows)."""
+    from building_a_rag_pipeline_with_airflow_spark.pipeline import rag_query
+
+    prefilter = F.col("lang") == "en" if filtered else None
+    df = rag_query(written_chunk_index, "spark join merge", k=5, prefilter=prefilter)
+    sc = spark.sparkContext
+    group = f"rag-single-scan-{filtered}"
+    sc.setJobGroup(group, "rag_query single-scan contract")
+    try:
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 1 and rows[0].n_sources == 5
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 1
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    plan = plan.split("== Initial Plan ==")[0]  # the final adaptive plan
+    assert plan.count("FileScan parquet") == 1, plan
+    assert "Join" not in plan, plan
+
+
+def test_retrieve_chunks_equals_join_back_reference(spark, tmp_path):
+    """retrieve_chunks equals the join-back formulation it replaced (top-k
+    ids joined back to the index, then ranked), kept here as the
+    reference: same rows, columns and column order over tied scores, a
+    NULL embedding, a prefilter, and k beyond the matching rows."""
+    from pyspark.sql import Window
+
+    from building_a_rag_pipeline_with_airflow_spark.functions.embed import embed_text
+    from building_a_rag_pipeline_with_airflow_spark.operators import retrieval
+    from building_a_rag_pipeline_with_airflow_spark.operators.similarity import (
+        topk_cosine,
+    )
+
+    query = "spark join merge"
+    rows = [(100 + i, i, f"hit {i}", "en", embed_text(query)) for i in range(1, 5)]
+    rows += [
+        (100 + i, i % 3, f"other {i}", "de" if i % 2 else "en", embed_text(f"other words {i}"))
+        for i in range(5, 13)
+    ]
+    rows.append((113, 13, "no vector", "de", None))
+    path = str(tmp_path / "index")
+    spark.createDataFrame(
+        rows, "chunk_id bigint, doc_id bigint, text string, lang string, embedding array<float>"
+    ).write.parquet(path)
+    index = spark.read.parquet(path)
+
+    def join_back(k, prefilter):
+        topk = topk_cosine(
+            index, embed_text(query), k=k, vec_col="embedding",
+            id_col="chunk_id", prefilter=prefilter,
+        )
+        w = Window.orderBy(F.desc("score"), F.asc("chunk_id"))
+        return topk.join(index.drop("embedding"), "chunk_id").withColumn(
+            "rank", F.row_number().over(w)
+        )
+
+    de = F.col("lang") == "de"
+    # k=3 cuts inside the four-way tie at score 1.0; k=20 and the
+    # filtered k=10 run past the matching rows and reach the NULL score
+    for k, prefilter in ((3, None), (5, None), (20, None), (10, de)):
+        got = retrieval.retrieve_chunks(index, query, k=k, prefilter=prefilter)
+        want = join_back(k, prefilter)
+        assert got.columns == want.columns
+        assert got.orderBy("rank").collect() == want.orderBy("rank").collect(), k
+    top = retrieval.retrieve_chunks(index, query, k=3).orderBy("rank").collect()
+    assert [r.chunk_id for r in top] == [101, 102, 103]
+    tail = retrieval.retrieve_chunks(index, query, k=20).orderBy("rank").collect()
+    assert len(tail) == 13 and tail[-1].chunk_id == 113 and tail[-1].score is None
