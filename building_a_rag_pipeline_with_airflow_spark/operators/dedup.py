@@ -210,7 +210,7 @@ def build_shingle_index(
         F.count("*").cast("bigint").alias("n_shingles")
     )
     postings = sh.join(dfreq, "shingle").withColumn(
-        "bucket", F.pmod(F.xxhash64("shingle"), F.lit(n_buckets)).cast("int")
+        "bucket", index_layout.bucket_of("shingle", n_buckets)
     )
     # one shuffle into the bucket layout; sort within files for row-group
     # skipping on shingle point lookups
@@ -1032,7 +1032,7 @@ def build_substring_index(
         F.count("*").cast("bigint").alias("h_count")
     )
     rows = wins.join(counts, "h").withColumn(
-        "bucket", F.pmod(F.xxhash64("h"), F.lit(n_buckets)).cast("int")
+        "bucket", index_layout.bucket_of("h", n_buckets)
     )
     index_layout.write_index_rows(
         rows,

@@ -39,6 +39,10 @@ from pyspark.sql import functions as F
 
 from building_a_rag_pipeline_with_airflow_spark.functions.text import tokens
 from building_a_rag_pipeline_with_airflow_spark.operators import ensure_min_partitions
+from building_a_rag_pipeline_with_airflow_spark.operators.similarity import (
+    _per_query_topk,
+)
+from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
 
 __all__ = [
     "bm25_score",
@@ -89,6 +93,18 @@ def _check_query_terms(query_terms, op: str) -> "list[str]":
     return terms
 
 
+def _bm25_weight(n_docs: Column, avgdl: Column, k1: float, b: float) -> Column:
+    """BM25 weight of one posting row (``tf``, ``df_t``, ``dl``): the
+    Lucene idf times the length-normalized tf saturation. Every BM25
+    path here sums this one expression, so their scores agree bit for
+    bit."""
+    tf, df_t = F.col("tf"), F.col("df_t")
+    idf = F.log(F.lit(1.0) + (n_docs - df_t + 0.5) / (df_t + 0.5))
+    return idf * (
+        tf * (k1 + 1.0) / (tf + k1 * (1.0 - b + b * F.col("dl") / avgdl))
+    )
+
+
 def bm25_score(
     df: DataFrame,
     query_terms: list[str],
@@ -129,28 +145,16 @@ def bm25_score(
         F.count("*").cast("double").alias("n_docs"),
         F.avg("dl").alias("avgdl"),
     )
-    idf = (
+    dfreq = (
         qtf.groupBy("term")
         .agg(F.count("*").cast("double").alias("df_t"))
         .crossJoin(F.broadcast(stats))
-        .select(
-            "term",
-            F.log(
-                F.lit(1.0)
-                + (F.col("n_docs") - F.col("df_t") + 0.5) / (F.col("df_t") + 0.5)
-            ).alias("idf"),
-            "avgdl",
-        )
     )
-    contrib = F.col("idf") * (
-        F.col("tf")
-        * (k1 + 1.0)
-        / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.col("avgdl")))
-    )
+    weight = _bm25_weight(F.col("n_docs"), F.col("avgdl"), k1, b)
     return (
-        qtf.join(F.broadcast(idf), "term")
+        qtf.join(F.broadcast(dfreq), "term")
         .groupBy(id_col)
-        .agg(F.round(F.sum(contrib), 4).alias("score"))
+        .agg(F.round(F.sum(weight), 4).alias("score"))
     )
 
 
@@ -464,7 +468,6 @@ def build_postings_index(
       resolve).
     """
     from building_a_rag_pipeline_with_airflow_spark.operators import require_nonempty
-    from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
 
     index_layout.check_n_buckets(n_buckets, "build_postings_index")
     base = ensure_min_partitions(_tokenized(df, id_col, text_col))
@@ -478,7 +481,7 @@ def build_postings_index(
     )
     dfreq = tf.groupBy("term").agg(F.count("*").cast("double").alias("df_t"))
     postings = tf.join(dfreq, "term").withColumn(
-        "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
+        "bucket", index_layout.bucket_of("term", n_buckets)
     )
     index_layout.write_index_rows(
         postings,
@@ -510,6 +513,38 @@ def build_postings_index(
     )
 
 
+def _weighted_postings(spark, path: str, prune, k1: float, b: float) -> DataFrame:
+    """The BM25 query core both index paths share: the postings of a
+    :func:`build_postings_index` layout cut by ``prune(postings,
+    n_buckets)``, each row carrying its BM25 weight ``_w``.
+
+    On an extended index (``streaming.ingest.streaming_extend_postings_index``
+    appends under new ``_batch_id`` partitions and flips
+    ``meta.extended``) the stored per-row ``df_t`` is batch-local, so it
+    is recounted in-plan over the already-pruned rows — ≤ |query terms|
+    keys, so the recount is O(matching posting lists) and its join
+    broadcasts. ``n_docs`` and ``avgdl`` come from the per-batch
+    ``batch_stats`` rows there (one per batch, summed driver-side —
+    replay-idempotent where an incremental meta fold would double-count
+    a replayed batch), and from ``meta`` otherwise."""
+    meta = index_layout.read_meta(spark, path)
+    post = prune(spark.read.parquet(f"{path}/postings"), int(meta["n_buckets"]))
+    if bool(meta["extended"]):
+        bs = (
+            spark.read.parquet(f"{path}/batch_stats")
+            .agg(F.sum("n_docs").alias("n"), F.sum("sum_dl").alias("s"))
+            .first()
+        )
+        n_docs, avgdl = float(bs["n"]), float(bs["s"]) / float(bs["n"])
+        dfreq = post.groupBy("term").agg(
+            F.count("*").cast("double").alias("df_t")
+        )
+        post = post.drop("df_t").join(F.broadcast(dfreq), "term")
+    else:
+        n_docs, avgdl = float(meta["n_docs"]), float(meta["avgdl"])
+    return post.withColumn("_w", _bm25_weight(F.lit(n_docs), F.lit(avgdl), k1, b))
+
+
 def bm25_topk_from_index(
     spark,
     path: str,
@@ -522,69 +557,27 @@ def bm25_topk_from_index(
     """Top-k BM25 against a :func:`build_postings_index` layout —
     result-identical to :func:`bm25_topk` on the same corpus, but the
     corpus is never re-tokenized: the scan partition-prunes to the query
-    terms' hash buckets (driver-side bucket resolve over the term
-    literals — a handful of rows, same class as the IVF probe-cell
-    resolve), then row-group-skips to the terms inside each bucket via
-    the ``term`` min/max stats the build sorted for. Work at query time
-    is O(matching posting lists), independent of corpus size.
-
-    Extended indexes (``streaming.ingest.streaming_extend_postings_index``
-    appends under new ``_batch_id`` partitions and flips
-    ``meta.extended``): the stored per-row ``df_t`` is batch-local there,
-    so when the meta flag says extended the document frequency is
-    recounted in-plan — over the already-pruned scan, so the recount is
-    itself O(matching posting lists), not a corpus pass. ``n_docs`` and
-    ``avgdl`` stay exact via the per-batch ``batch_stats`` rows (one per
-    batch, summed driver-side — replay-idempotent where an incremental
-    meta fold would double-count a replayed batch).
+    terms' hash buckets, then row-group-skips to the terms inside each
+    bucket via the ``term`` min/max stats the build sorted for. The
+    bucket filter is ``index_layout.bucket_of`` over each term literal;
+    Catalyst folds it into constant ``PartitionFilters``, so resolving
+    the buckets runs no job. Work at query time is O(matching posting
+    lists), independent of corpus size; extended indexes recount
+    ``df_t`` in-plan (:func:`_weighted_postings`).
     """
     terms = _check_query_terms(query_terms, "bm25_topk_from_index")
-    from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
 
-    meta = index_layout.read_meta(spark, path)
-    n_buckets = int(meta["n_buckets"])
-    if bool(meta["extended"]):
-        # exact corpus stats from the per-batch rows (one row per batch)
-        bs = (
-            spark.read.parquet(f"{path}/batch_stats")
-            .agg(F.sum("n_docs").alias("n"), F.sum("sum_dl").alias("s"))
-            .first()
+    def prune(post: DataFrame, n_buckets: int) -> DataFrame:
+        # Column literals, never SQL text: the terms are user input
+        buckets = [index_layout.bucket_of(F.lit(t), n_buckets) for t in terms]
+        return post.where(F.col("bucket").isin(*buckets)).where(
+            F.col("term").isin(terms)
         )
-        n_docs_val, avgdl_val = float(bs["n"]), float(bs["s"]) / float(bs["n"])
-    else:
-        n_docs_val, avgdl_val = float(meta["n_docs"]), float(meta["avgdl"])
-    # resolve the terms' buckets with the same JVM hash the build used;
-    # |terms| rows through the JVM, driver-side metadata
-    bucket_rows = (
-        spark.createDataFrame([(t,) for t in terms], "term string")
-        .select(F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int").alias("b"))
-        .collect()
-    )
-    buckets = sorted({r["b"] for r in bucket_rows})
-    post = (
-        spark.read.parquet(f"{path}/postings")
-        .where(F.col("bucket").isin(buckets))  # partition pruning
-        .where(F.col("term").isin(terms))  # row-group skipping
-    )
-    if bool(meta["extended"]):
-        # batch-local stored df_t is stale across batches: recount over
-        # the pruned rows (≤ |query terms| keys — the join broadcasts)
-        dfreq = post.groupBy("term").agg(
-            F.count("*").cast("double").alias("df_t")
-        )
-        post = post.drop("df_t").join(F.broadcast(dfreq), "term")
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(n_docs_val) - F.col("df_t") + 0.5) / (F.col("df_t") + 0.5)
-    )
-    contrib = idf * (
-        F.col("tf")
-        * (k1 + 1.0)
-        / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl_val)))
-    )
+
     return (
-        post.groupBy("doc_id")
-        .agg(F.round(F.sum(contrib), 4).alias("score"))
+        _weighted_postings(spark, path, prune, k1, b)
+        .groupBy("doc_id")
+        .agg(F.round(F.sum("_w"), 4).alias("score"))
         .orderBy(F.desc("score"), F.asc("doc_id"))
         .limit(k)
     )
@@ -605,34 +598,21 @@ def bm25_topk_many_from_index(
     query in ``queries_df`` (``q_id``, ``terms`` array) in ONE job —
     per-query result-identical to the single-query path.
 
-    The single-query path resolves term→bucket on the DRIVER (a handful
-    of literals); looping it over a query workload costs O(q) driver
-    round-trips and O(q) jobs. Here the mapping runs IN-PLAN: the
-    workload's distinct terms get their bucket via the same
-    ``pmod(xxhash64(term), n_buckets)`` the build used, and the postings
-    scan is pruned by a broadcast join on ``(bucket, term)`` — the bucket
-    side becomes a dynamic-partition-pruning filter on the scan (plan
-    shows ``dynamicpruning`` in PartitionFilters), the term side a
+    The single-query path prunes by a literal bucket list; a workload's
+    terms are not known to the driver, so here the mapping runs
+    IN-PLAN: the workload's distinct terms get their bucket via the same
+    ``index_layout.bucket_of`` the build used, and the postings scan is
+    pruned by a broadcast join on ``(bucket, term)`` — the bucket side
+    becomes a dynamic-partition-pruning filter on the scan (plan shows
+    ``dynamicpruning`` in PartitionFilters), the term side a
     broadcast-hash residual. Work is O(matching posting lists for the
     UNION of query terms), scanned once even for terms shared by many
     queries; the per-query fan-out happens after the postings have been
-    cut down. Final top-k is a per-query window (partition = one query's
-    candidate docs — bounded), never a global sort.
+    cut down. Final top-k is the salted two-phase per-query cut
+    (``similarity._per_query_topk``): a query with one common term can
+    have corpus-scale candidates, which one per-query window would sort
+    in a single task.
     """
-    from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
-
-    meta = index_layout.read_meta(spark, path)
-    n_buckets = int(meta["n_buckets"])
-    extended = bool(meta["extended"])
-    if extended:
-        bs = (
-            spark.read.parquet(f"{path}/batch_stats")
-            .agg(F.sum("n_docs").alias("n"), F.sum("sum_dl").alias("s"))
-            .first()
-        )
-        n_docs_val, avgdl_val = float(bs["n"]), float(bs["s"]) / float(bs["n"])
-    else:
-        n_docs_val, avgdl_val = float(meta["n_docs"]), float(meta["avgdl"])
     # (q_id, term) pairs, deduped within a query (a repeated query term
     # must not double a posting's contribution — same set semantics as
     # the single-query path's sorted(set(...)))
@@ -642,57 +622,22 @@ def bm25_topk_many_from_index(
         )
         .distinct()
     )
-    term_buckets = (
-        qt.select("term")
-        .distinct()
-        .withColumn(
-            "bucket", F.pmod(F.xxhash64("term"), F.lit(n_buckets)).cast("int")
+
+    def prune(post: DataFrame, n_buckets: int) -> DataFrame:
+        term_buckets = (
+            qt.select("term")
+            .distinct()
+            .withColumn("bucket", index_layout.bucket_of("term", n_buckets))
         )
+        return post.join(F.broadcast(term_buckets), ["bucket", "term"])
+
+    per_query = (
+        _weighted_postings(spark, path, prune, k1, b)
+        .join(qt, "term")
+        .groupBy("q_id", "doc_id")
+        .agg(F.round(F.sum("_w"), 4).alias("score"))
     )
-    post = spark.read.parquet(f"{path}/postings").join(
-        F.broadcast(term_buckets), ["bucket", "term"]
-    )
-    if extended:
-        # batch-local stored df_t is stale across batches: recount over
-        # the pruned rows (≤ |workload terms| keys — broadcastable)
-        dfreq = post.groupBy("term").agg(
-            F.count("*").cast("double").alias("df_t")
-        )
-        post = post.drop("df_t").join(F.broadcast(dfreq), "term")
-    idf = F.log(
-        F.lit(1.0)
-        + (F.lit(n_docs_val) - F.col("df_t") + 0.5) / (F.col("df_t") + 0.5)
-    )
-    contrib = idf * (
-        F.col("tf")
-        * (k1 + 1.0)
-        / (F.col("tf") + k1 * (1.0 - b + b * F.col("dl") / F.lit(avgdl_val)))
-    )
-    hits = post.withColumn("_c", contrib).join(qt, "term")
-    per_query = hits.groupBy("q_id", "doc_id").agg(
-        F.round(F.sum("_c"), 4).alias("score")
-    )
-    # Salted two-phase top-k (the weighted_sample_per_group pattern): a
-    # query containing one common term can have corpus-scale candidates,
-    # and row_number() OVER (PARTITION BY q_id) would sort them all in
-    # one task. Phase 1 cuts top-k within (q_id, doc-hash shard); phase 2
-    # re-ranks the bounded q×shards×k survivors. Composition is exactly
-    # the per-query top-k (a query-wide winner wins its shard too).
-    n_shards = 16
-    w1 = Window.partitionBy(
-        "q_id", F.pmod(F.xxhash64("doc_id"), F.lit(n_shards))
-    ).orderBy(F.desc("score"), F.asc("doc_id"))
-    survivors = (
-        per_query.withColumn("_rk", F.row_number().over(w1))
-        .where(F.col("_rk") <= int(k))
-        .drop("_rk")
-    )
-    w2 = Window.partitionBy("q_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        survivors.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= int(k))
-        .select("q_id", "doc_id", "score", "rank")
-    )
+    return _per_query_topk(per_query, "q_id", "doc_id", k)
 
 
 def consolidate_postings_index(
@@ -714,8 +659,6 @@ def consolidate_postings_index(
     as after a fresh build. Computed from the stored postings alone,
     never a corpus re-tokenization. Mechanics + swap-then-expire publishing via
     the family-shared ``index_layout.consolidate_index``."""
-    from building_a_rag_pipeline_with_airflow_spark.sources import index_layout
-
     meta = index_layout.read_meta(spark, path)
     bs = spark.read.parquet(f"{path}/batch_stats")
     stored_t = {f.name: f.dataType for f in bs.schema.fields}

@@ -233,7 +233,7 @@ def build_trigram_index(
         F.count("*").cast("bigint").alias("gram_df")
     )
     rows = post.join(dfreq, "gram").withColumn(
-        "bucket", F.pmod(F.xxhash64("gram"), F.lit(n_buckets)).cast("int")
+        "bucket", index_layout.bucket_of("gram", n_buckets)
     )
     index_layout.write_index_rows(
         rows,
@@ -293,7 +293,7 @@ def trigram_topk_from_index(
     ).withColumn("_qn", F.size("_g"))
     qpost = qg.select("q_id", "_qn", F.explode("_g").alias("gram"))
     qgrams = qpost.select("gram").distinct().withColumn(
-        "bucket", F.pmod(F.xxhash64("gram"), F.lit(n_buckets)).cast("int")
+        "bucket", index_layout.bucket_of("gram", n_buckets)
     )
     raw = spark.read.parquet(f"{path}/postings")
     # max_posting=None disables the stop-gram guard on BOTH paths — the

@@ -29,6 +29,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from building_a_rag_pipeline_with_airflow_spark.operators import baskets
+from building_a_rag_pipeline_with_airflow_spark.operators.similarity import (
+    _per_query_topk,
+)
 
 
 def interactions_of(
@@ -61,9 +64,10 @@ def cooccurrence_recommend(
     """Item-item recommendations from basket co-occurrence: for each
     item, the top-k other items by shared-basket count (ties broken by
     item id for determinism). Symmetric pairs from the exact basket
-    tier + one per-item window over the (items × k)-scale pair frame."""
-    from pyspark.sql import Window
-
+    tier + the salted two-phase per-item cut
+    (:func:`similarity._per_query_topk`): a mega-popular item co-occurs
+    with a catalog-scale rec list, which one per-item window would sort
+    in a single task."""
     pairs = baskets.frequent_pairs(
         df, group_col, item_col, min_count=min_count, max_items=max_items
     )
@@ -74,24 +78,8 @@ def cooccurrence_recommend(
             F.col("item_b").alias("item"), F.col("item_a").alias("rec"), "n"
         )
     )
-    # Salted two-phase per-item cut (the similarity._per_query_topk
-    # pattern): a mega-popular item co-occurs with a catalog-scale rec
-    # list, and one per-item window would sort it in a single task.
-    n_shards = 16
-    w1 = Window.partitionBy(
-        "item", F.pmod(F.xxhash64("rec"), F.lit(n_shards))
-    ).orderBy(F.desc("n"), F.col("rec"))
-    survivors = (
-        sym.withColumn("_rk", F.row_number().over(w1))
-        .where(F.col("_rk") <= int(k))
-        .drop("_rk")
-    )
-    w2 = Window.partitionBy("item").orderBy(F.desc("n"), F.col("rec"))
-    return (
-        survivors.withColumn("rank", F.row_number().over(w2))
-        .where(F.col("rank") <= int(k))
-        .select("item", "rec", "n", "rank")
-    )
+    top = _per_query_topk(sym.withColumnRenamed("n", "score"), "item", "rec", k)
+    return top.withColumnRenamed("score", "n")
 
 
 def als_recommend(

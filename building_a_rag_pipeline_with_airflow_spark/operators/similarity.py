@@ -61,10 +61,10 @@ def _topk_carrying(corpus, query_vec, k, vec_col, id_col, prefilter, carry):
 
 def _per_query_topk(scored, q_id: str, c_id: str, k: int, n_shards: int = 16):
     """Salted two-phase per-query top-k over a (q, candidate, score)
-    frame — the weighted_sample_per_group / bm25_topk_many pattern. A
-    single ``row_number() OVER (PARTITION BY q)`` sorts each query's
-    WHOLE candidate set (corpus-scale for the exact tier, a hot band for
-    LSH) in one task; phase 1 cuts top-k within (q, candidate-hash
+    frame — the weighted_sample_per_group pattern. A single
+    ``row_number() OVER (PARTITION BY q)`` sorts each query's WHOLE
+    candidate set (corpus-scale for the exact tier, a hot band for LSH)
+    in one task; phase 1 cuts top-k within (q, candidate-hash
     shard), phase 2 re-ranks the bounded q×shards×k survivors.
     Composition is exactly the per-query top-k — a query-wide winner
     also wins its shard; deterministic tiebreaks unchanged."""

@@ -25,6 +25,7 @@ from building_a_rag_pipeline_with_airflow_spark.operators.retrieval import (
     assemble_context,
     retrieve_chunks,
 )
+from building_a_rag_pipeline_with_airflow_spark.sources.index_layout import bucket_of
 
 STRATEGIES = ("fixed", "recursive", "semantic")
 
@@ -135,7 +136,7 @@ def write_index_bucketed(
     (
         index.withColumn(
             "doc_bucket",
-            F.pmod(F.xxhash64(F.col("doc_id").cast("string")), F.lit(n_doc_buckets)).cast("int"),
+            bucket_of(F.col("doc_id").cast("string"), n_doc_buckets),
         )
         .repartition(n_doc_buckets, "doc_bucket")
         .write.mode(mode)
@@ -170,9 +171,6 @@ def upsert_documents(
     Metadata columns the index was built with (``build_index``'s
     ``keep_cols``) are read off the stored layout: the index columns that
     ``changed_docs`` carries and chunking does not produce."""
-    bucket_of = F.pmod(
-        F.xxhash64(F.col("doc_id").cast("string")), F.lit(n_doc_buckets)
-    ).cast("int")
     stored = spark.read.parquet(path)
     fresh = build_index(changed_docs, strategy=strategy, dim=dim)
     keep_cols = tuple(
@@ -181,7 +179,9 @@ def upsert_documents(
     )
     if keep_cols:
         fresh = build_index(changed_docs, strategy=strategy, dim=dim, keep_cols=keep_cols)
-    fresh = fresh.withColumn("doc_bucket", bucket_of)
+    fresh = fresh.withColumn(
+        "doc_bucket", bucket_of(F.col("doc_id").cast("string"), n_doc_buckets)
+    )
     affected = sorted(
         r.doc_bucket
         for r in fresh.select("doc_bucket").distinct().collect()

@@ -40,7 +40,7 @@ from __future__ import annotations
 import os
 from typing import Callable, Sequence
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.utils import AnalysisException
@@ -61,6 +61,15 @@ def check_n_buckets(n_buckets: int, op: str) -> None:
             f"{op}: n_buckets must be >= 1, got {n_buckets} "
             "(pmod by 0 is NULL — the bucket layout would be broken)"
         )
+
+
+def bucket_of(key: "str | Column", n_buckets: int) -> Column:
+    """The family's key→bucket hash, ``pmod(xxhash64(key), n_buckets)``
+    as int — the one expression every bucketed layout is written with and
+    every reader prunes by. Stored layouts depend on it byte for byte:
+    changing it makes every existing index unreadable by its queries."""
+    return F.pmod(F.xxhash64(key), F.lit(int(n_buckets))).cast("int")
+
 
 _INTEGRAL_RANK = {T.ByteType: 1, T.ShortType: 2, T.IntegerType: 3, T.LongType: 4}
 
@@ -354,7 +363,7 @@ def consolidate_index(
     task): read ``<path>/<rows_subdir>``, drop the stale ``count_col``,
     recount per ``key_col`` (cast to the STORED column type so the
     consolidated layout is schema-identical to a fresh build),
-    re-bucket by ``pmod(xxhash64(key), meta.n_buckets)`` and write
+    re-bucket by :func:`bucket_of` over ``meta.n_buckets`` and write
     sorted-by-key bucketed files; ``extra_subdirs`` side tables
     (shingle doc sizes, trigram names) are batch-independent payloads —
     copied under batch ``-1`` with their ``_batch_id`` dropped.
@@ -390,7 +399,7 @@ def consolidate_index(
         F.count("*").cast(stored_count_t).alias(count_col)
     )
     rows = base.join(fresh_counts, key_col).withColumn(
-        "bucket", F.pmod(F.xxhash64(key_col), F.lit(n_buckets)).cast("int")
+        "bucket", bucket_of(key_col, n_buckets)
     )
     write_index_rows(
         rows,
@@ -465,7 +474,7 @@ def start_postings_extender(
        stored counts exactly);
     5. batch-local ``count_col`` doc-freqs join back (schema-compatible
        with the build's corpus-wide column), rows hash-bucket by
-       ``pmod(xxhash64(key), meta.n_buckets)`` and append under this
+       :func:`bucket_of` over ``meta.n_buckets`` and append under this
        ``_batch_id`` with dynamic overwrite (replay idempotence), sorted
        by key for row-group skipping;
     6. ``extra_outputs(batch_df, rows, meta)`` yields (subdir, df) side
@@ -495,10 +504,7 @@ def start_postings_extender(
                 F.count("*").cast("bigint").alias(count_col)
             )
             out = rows.join(dfreq, key_col).withColumn(
-                "bucket",
-                F.pmod(
-                    F.xxhash64(key_col), F.lit(int(meta.n_buckets))
-                ).cast("int"),
+                "bucket", bucket_of(key_col, meta.n_buckets)
             )
             write_index_rows(
                 out,

@@ -276,6 +276,118 @@ def test_bm25_many_matches_per_query_loop_and_prunes(spark, sf_dir, tmp_path):
     assert "BroadcastHashJoin" in plan
 
 
+def _scan_buckets(df) -> "set[int]":
+    """The constant bucket list in the postings scan's PartitionFilters."""
+    import re
+
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    m = re.search(r"PartitionFilters: \[bucket#\d+ IN \(([\d,]+)\)\]", plan)
+    assert m, plan
+    return {int(v) for v in m.group(1).split(",")}
+
+
+def _stored_buckets(spark, idx, terms) -> "set[int]":
+    """The buckets the build stored the posting lists of ``terms`` under."""
+    post = spark.read.parquet(f"{idx}/postings").where(F.col("term").isin(terms))
+    return {r.bucket for r in post.select("bucket").distinct().collect()}
+
+
+def test_bm25_from_index_resolves_buckets_in_plan(spark, sf_dir, tmp_path):
+    """Building and collecting a single-query index lookup runs 5 jobs
+    (meta schema and row, postings schema, the aggregate's shuffle
+    stage, the top-k): no job resolves the term buckets. They reach the
+    scan as constant PartitionFilters holding exactly the buckets the
+    build stored the query terms under."""
+    from building_a_rag_pipeline_with_airflow_spark import schemas
+
+    docs = schemas.load_table(spark, sf_dir, "documents")
+    idx = str(tmp_path / "postings_idx_jobs")
+    lexical.build_postings_index(docs, idx, n_buckets=8)
+    terms = ["spark", "join", "window", "merge"]
+    sc = spark.sparkContext
+    group = "bm25-from-index-jobs"
+    sc.setJobGroup(group, "bm25_topk_from_index job count")
+    try:
+        df = lexical.bm25_topk_from_index(spark, idx, terms, k=5)
+        rows = df.collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert len(rows) == 5
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 5
+    assert _scan_buckets(df) == _stored_buckets(spark, idx, terms)
+
+
+def test_bm25_from_index_quoted_and_non_ascii_terms(spark, tmp_path):
+    """Terms carrying quotes, backslashes and non-ASCII text enter the
+    plan as literals: they prune to the buckets they were stored under
+    and score exactly as the in-plan BM25 does."""
+    docs = spark.createDataFrame(
+        [
+            (1, "o'neil café spark"),
+            (2, "a\\b o'neil o'neil"),
+            (3, "café café join"),
+            (4, "plain words here"),
+            (5, "spark a\\b \"quoted\""),
+        ],
+        "doc_id int, text string",
+    )
+    idx = str(tmp_path / "quoted_idx")
+    lexical.build_postings_index(docs, idx, n_buckets=16)
+    for terms in (["o'neil", "a\\b", "café"], ['"quoted"', "spark"]):
+        got = lexical.bm25_topk_from_index(spark, idx, terms, k=5)
+        expect = lexical.bm25_topk(docs, terms, k=5)
+        assert [tuple(r) for r in got.collect()] == [
+            tuple(r) for r in expect.collect()
+        ], terms
+        assert _scan_buckets(got) == _stored_buckets(spark, idx, terms), terms
+
+
+def test_bm25_many_on_extended_index_matches_single_and_inplan(
+    spark, sf_dir, tmp_path
+):
+    """On a streaming-extended index (batch-local stored df_t, corpus
+    stats summed over batch_stats) the batch query equals the per-query
+    index lookup, and both equal the in-plan BM25 over the union corpus."""
+    from building_a_rag_pipeline_with_airflow_spark.streaming import ingest
+
+    docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    idx = str(tmp_path / "ext_idx")
+    lexical.build_postings_index(
+        docs.where(F.col("doc_id") % 2 == 0), idx, n_buckets=8
+    )
+    landing = tmp_path / "ext_landing"
+    landing.mkdir()
+    docs.where(F.col("doc_id") % 2 == 1).write.parquet(str(landing / "drop1"))
+    ingest.streaming_extend_postings_index(
+        ingest.read_documents_stream(spark, f"{landing}/*"),
+        idx,
+        str(tmp_path / "ext_ckpt"),
+    ).awaitTermination(120)
+    assert spark.read.parquet(f"{idx}/meta").first().extended is True
+
+    workloads = {
+        1: ["spark", "join", "window"],
+        2: ["merge", "scan"],
+        3: ["spark", "merge", "absent"],  # shared terms and an unknown one
+    }
+    queries = spark.createDataFrame(
+        list(workloads.items()), "q_id int, terms array<string>"
+    )
+    many = {}
+    for r in lexical.bm25_topk_many_from_index(spark, idx, queries, k=7).collect():
+        many.setdefault(r.q_id, []).append((r.rank, r.doc_id, r.score))
+    for qid, terms in workloads.items():
+        single = [
+            tuple(r)
+            for r in lexical.bm25_topk_from_index(spark, idx, terms, k=7).collect()
+        ]
+        inplan = [tuple(r) for r in lexical.bm25_topk(docs, terms, k=7).collect()]
+        assert single == inplan and len(single) == 7, qid
+        assert sorted(many[qid]) == [
+            (rank, d, sc) for rank, (d, sc) in enumerate(single, start=1)
+        ], qid
+
+
 def test_ranked_vocab_equals_global_window(spark):
     """The distributed vocabulary rank must reproduce
     row_number() OVER (ORDER BY freq DESC, word) exactly."""
